@@ -65,13 +65,21 @@ private[engine] object AtomicCreate {
     * one read routine every sidecar consumer (view text, name
     * pointers, mapping specs) shares.
     */
-  def readString(f: FileSystem, p: HPath): Option[String] = {
-    if (!f.exists(p)) return None
+  def readString(f: FileSystem, p: HPath): Option[String] =
+    if (f.exists(p)) Some(readExisting(f, p)) else None
+
+  /** [[readString]] for a file known to exist (a listed manifest
+    * version, a pointer whose existence was just checked): throws
+    * `FileNotFoundException` when absent, and costs one status probe
+    * plus one open — no separate existence check on the commit path.
+    */
+  def readExisting(f: FileSystem, p: HPath): String = {
+    val st = f.getFileStatus(p)
     val in = f.open(p)
     try {
-      val buf = new Array[Byte](f.getFileStatus(p).getLen.toInt)
+      val buf = new Array[Byte](st.getLen.toInt)
       in.readFully(buf)
-      Some(new String(buf, "UTF-8"))
+      new String(buf, "UTF-8")
     } finally in.close()
   }
 }

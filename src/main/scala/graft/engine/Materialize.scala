@@ -200,14 +200,7 @@ object Materialize {
     val key = ptr.toString
     val f = fs(s, rootDir)
 
-    def readPtr(): String = {
-      val st = f.getFileStatus(ptr)
-      val in = f.open(ptr)
-      try {
-        val buf = new Array[Byte](st.getLen.toInt)
-        in.readFully(buf); new String(buf, UTF_8)
-      } finally in.close()
-    }
+    def readPtr(): String = AtomicCreate.readExisting(f, ptr)
 
     // fresh-state: drop a previously published artifact (data first,
     // then the pointer — pointer existence == completeness) so this
@@ -247,12 +240,7 @@ object Materialize {
         val n = st.getPath.getName
         if (n.startsWith(prefix) && !n.contains(keepVerH) &&
             n.endsWith(".ptr") && st.getModificationTime < cutoff) {
-          val st2 = f.getFileStatus(st.getPath)
-          val in = f.open(st.getPath)
-          val data = try {
-            val buf = new Array[Byte](st2.getLen.toInt)
-            in.readFully(buf); new String(buf, UTF_8)
-          } finally in.close()
+          val data = AtomicCreate.readExisting(f, st.getPath)
           f.delete(new HPath(data), true)
           f.delete(st.getPath, false)
         }

@@ -68,13 +68,9 @@ object Normalize {
     */
   def apply(raw: DataFrame, spec: SourceSpec,
       ingestTs: Column = current_timestamp(),
-      observeAs: Option[String] = None): DataFrame = {
-    val observed = observeAs.fold(raw)(name => raw.observe(name,
-      count(lit(1)).as("rows_in"),
-      count(col(CorruptCol)).as("corrupt_dropped")))
-    val clean = observed.filter(col(CorruptCol).isNull)
-    clean.select(canonicalColumns(spec, raw.columns.toSeq, ingestTs): _*)
-  }
+      observeAs: Option[String] = None): DataFrame =
+    clean(observeAs.fold(raw)(raw.observe(_, rowsIn, corruptDropped)), spec,
+      ingestTs)
 
   /** Batch variant of the observed pipeline: metrics land on the
     * [[org.apache.spark.sql.Observation]] handle after the first action
@@ -82,24 +78,25 @@ object Normalize {
     */
   def observed(raw: DataFrame, spec: SourceSpec,
       obs: org.apache.spark.sql.Observation,
-      ingestTs: Column = current_timestamp()): DataFrame = {
-    val o = raw.observe(obs,
-      count(lit(1)).as("rows_in"),
-      count(col(CorruptCol)).as("corrupt_dropped"))
-    val clean = o.filter(col(CorruptCol).isNull)
-    clean.select(canonicalColumns(spec, raw.columns.toSeq, ingestTs): _*)
-  }
+      ingestTs: Column = current_timestamp()): DataFrame =
+    clean(raw.observe(obs, rowsIn, corruptDropped), spec, ingestTs)
+
+  private def rowsIn = count(lit(1)).as("rows_in")
+  private def corruptDropped = count(col(CorruptCol)).as("corrupt_dropped")
+
+  /** The body [[apply]] and [[observed]] share: drop corrupt records,
+    * project to the canonical model.
+    */
+  private def clean(raw: DataFrame, spec: SourceSpec,
+      ingestTs: Column): DataFrame =
+    raw.filter(col(CorruptCol).isNull)
+      .select(canonicalColumns(spec, raw.columns.toSeq, ingestTs): _*)
 
   /** Batch read of a bronze JSON directory with the spec's hardened options
     * (PERMISSIVE + corrupt capture + multiLine).
     */
   def readBatch(spark: SparkSession, spec: SourceSpec, path: String): DataFrame =
     spark.read.schema(spec.schema).options(spec.jsonOptions).json(path)
-
-  /** Streaming read of the same directory (micro-batch file source). */
-  def readStream(spark: SparkSession, spec: SourceSpec, path: String): DataFrame =
-    spark.readStream.format("json").schema(spec.schema)
-      .options(spec.jsonOptions).load(path)
 
   /** Batch read of a CSV bronze directory under the same hardening
     * contract as JSON (PERMISSIVE + corrupt-record capture): widens the

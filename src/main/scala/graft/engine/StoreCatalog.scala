@@ -1549,14 +1549,8 @@ final class StoreCatalog(basePath: String) {
     val hp = specFiles(f, path).lastOption.map(_._2).getOrElse {
       return None
     }
-    val in = f.open(hp)
-    val text =
-      try {
-        val buf = new Array[Byte](f.getFileStatus(hp).getLen.toInt)
-        in.readFully(buf); new String(buf, "UTF-8")
-      } finally in.close()
     val root = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(text)
+      .readTree(AtomicCreate.readExisting(f, hp))
     val pb = Option(root.get("partitionBy")).toSeq
       .flatMap(n => (0 until n.size()).map(n.get(_).asText()))
     val props = Seq("statsColumns", "bloomColumns", "morDeleteKey")

@@ -63,11 +63,18 @@ trait TableStore {
   *     with `Rename.NONE` on HDFS), so existence == completeness and a
   *     visible version is never half-written;
   *   - CONCURRENT WRITERS are safe without any lock: the version number
-  *     is the optimistic-concurrency token. A writer that loses the
-  *     atomic-publish race re-reads the winner's state, REBASES its
-  *     change (appends keep both batches; maintenance rewrites carry
-  *     fresh appends forward and abort against competing rewrites), and
-  *     retries at a higher version — the Iceberg/Delta commit protocol.
+  *     is the optimistic-concurrency token. Every verb commits through
+  *     ONE loop ([[commit]]): snapshot, publish `v<next>`, and on a lost
+  *     race re-read and retry strictly higher — the Iceberg/Delta
+  *     commit protocol. A verb states only its REBASE RULE, a plan from
+  *     (version, entries) to the entries to publish: appends keep both
+  *     batches (or no-op on a replayed id); schema DDL re-validates;
+  *     maintenance rewrites carry fresh appends forward and abort
+  *     against competing rewrites; blind replacements (overwrite,
+  *     truncate, create, clone, branch) abort once the table moved past
+  *     their snapshot. A lost race against a version file that is not
+  *     table state (no end marker) leaves the re-read version where it
+  *     was, so every verb steps over such a file to the next version.
   *     (Needs atomic create-if-absent from the store — hard link /
   *     namenode rename here; bare S3 needs an external coordinator,
   *     Delta's documented caveat too.);
@@ -178,12 +185,7 @@ final class ManifestTableStore(path: String,
 
   private def readManifestAt(f: FileSystem,
       p: HPath): Option[Seq[Entry]] = {
-    val st = f.getFileStatus(p)
-    val in = f.open(st.getPath)
-    val text = try {
-      val buf = new Array[Byte](st.getLen.toInt)
-      in.readFully(buf); new String(buf, "UTF-8")
-    } finally in.close()
+    val text = AtomicCreate.readExisting(f, p)
     if (!text.endsWith(EndMarker)) return None
     Some(text.linesIterator.filter(l => l.nonEmpty && l != EndMarker).map {
       l =>
@@ -217,21 +219,53 @@ final class ManifestTableStore(path: String,
         b.isDirectory && chain(b.getPath)))
   }
 
-  /** One optimistic-concurrency commit attempt, SINGLE-STEP: the full
-    * manifest content is written to a hidden temp file first, then
-    * published to `v<next>` with one atomic create-if-absent operation —
-    * so a version file either does not exist or is complete table state,
-    * and the version number itself is the conflict token (Iceberg/
-    * Delta's commit protocol). There is no window where a visible
-    * version is still being written, hence no eviction and no way for a
-    * writer to be evicted while believing its commit succeeded.
+  /** THE optimistic-commit loop: every state change of this store goes
+    * through here, and it is the only place a retry version is chosen.
+    * Starting from `snapshot` (the (version, entries) the verb already
+    * read), it asks `plan` for the entry list to publish at the next
+    * version. The plan is the verb's rebase rule, and answers one of:
+    *   - None — a replay or converged no-op: nothing is published and
+    *     the loop returns false;
+    *   - a throw — abort (a conflict the verb refuses to rebase over);
+    *   - Some(entries) — publish them.
+    * On a lost race the loop re-reads [[current]] and asks the plan
+    * again, always at a version strictly past the last one tried. The
+    * occupant of a lost version is either a complete competitor commit
+    * (the re-read version moved, and the plan rebases onto it) or a
+    * file that is NOT table state (no end marker: [[current]] skips it,
+    * so the re-read version equals the last one): nothing was
+    * committed, and a plan that compares versions simply retries
+    * higher instead of reporting a conflict. True iff this call
+    * published a version.
+    */
+  private def commit(f: FileSystem, snapshot: (Long, Seq[Entry]))(
+      plan: (Long, Seq[Entry]) => Option[Seq[Entry]]): Boolean = {
+    var next = snapshot._1 + 1
+    var out = plan.tupled(snapshot)
+    while (out.exists(!tryCommit(f, next, _))) {
+      val (nv, lines) = current(f)
+      next = math.max(nv + 1, next + 1)
+      out = plan(nv, lines)
+    }
+    out.isDefined
+  }
+
+  /** One commit attempt, SINGLE-STEP: the full manifest content is
+    * written to a hidden temp file first, then published to `v<next>`
+    * with one atomic create-if-absent operation — so a version file
+    * either does not exist or is complete table state, and the version
+    * number itself is the conflict token (Iceberg/Delta's commit
+    * protocol). There is no window where a visible version is still
+    * being written, hence no eviction and no way for a writer to be
+    * evicted while believing its commit succeeded.
     *
     * The atomic publish primitive is [[AtomicCreate]] (hard link on
     * local FS, namenode rename(NONE) on HDFS; bare object stores need an
     * external coordinator — the same caveat Delta documents).
     *
-    * Returns false on a lost race; the caller re-reads table state,
-    * REBASES its change, and retries at a higher version.
+    * Returns false on a lost race. Only [[commit]] calls this: it
+    * re-reads table state, asks the verb's plan to rebase, and retries
+    * at a higher version.
     */
   private def tryCommit(f: FileSystem, next: Long,
       lines: Seq[Entry]): Boolean =
@@ -539,14 +573,8 @@ final class ManifestTableStore(path: String,
   private def inheritedIds(f: FileSystem): Set[Long] =
     inheritedIdsCache.getOrElse {
       val p = new HPath(s"$path/clone_inherited_ids")
-      val ids: Set[Long] =
-        if (!f.exists(p)) Set.empty
-        else {
-          val in = f.open(p)
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-            .map(_.trim).filter(_.nonEmpty).map(_.toLong).toSet
-          finally in.close()
-        }
+      val ids: Set[Long] = AtomicCreate.readString(f, p).fold(Set.empty[Long])(
+        _.linesIterator.map(_.trim).filter(_.nonEmpty).map(_.toLong).toSet)
       inheritedIdsCache = Some(ids)
       ids
     }
@@ -563,15 +591,7 @@ final class ManifestTableStore(path: String,
     val f = fs(spark)
     if (!f.exists(checksDir)) return Nil
     f.listStatus(checksDir).map(_.getPath).sortBy(_.getName).toSeq
-      .map { p =>
-        val st = f.getFileStatus(p)
-        val in = f.open(p)
-        try {
-          val buf = new Array[Byte](st.getLen.toInt)
-          in.readFully(buf)
-          p.getName -> new String(buf, "UTF-8")
-        } finally in.close()
-      }
+      .map(p => p.getName -> AtomicCreate.readExisting(f, p))
   }
 
   /** Drop a constraint; later writes stop enforcing it. */
@@ -703,20 +723,14 @@ final class ManifestTableStore(path: String,
       s"batchId must be >= 0, got $batchId")
     val f = fs(df.sparkSession)
     guardInheritedId(f, batchId)
-    var (v, lines) = current(f)
+    val snapshot @ (_, lines) = current(f)
     if (lines.exists(_.batchId == batchId)) return // replay → idempotent no-op
     val dataDir = s"$path/data/batch-$batchId-${java.util.UUID.randomUUID()}"
     val entry = Entry(batchId, dataDir,
       write(df.withColumn("batch_id", lit(batchId)), dataDir))
-    var next = v + 1
-    while (!tryCommit(f, next, lines :+ entry)) {
-      // lost the race: the occupant is complete by construction
-      // (single-step publish), so rebase on the winner's state and try
-      // a higher version
-      val (nv, nlines) = current(f)
-      if (nlines.exists(_.batchId == batchId)) return // competitor replayed it
-      lines = nlines; v = nv
-      next = math.max(nv + 1, next + 1)
+    // rebase: keep the winner's batches; a competitor replayed ours → no-op
+    commit(f, snapshot) { (_, ls) =>
+      if (ls.exists(_.batchId == batchId)) None else Some(ls :+ entry)
     }
   }
 
@@ -747,19 +761,19 @@ final class ManifestTableStore(path: String,
     val spark = df.sparkSession
     val f = fs(spark)
     guardInheritedId(f, batchId)
-    val (v, lines) = current(f)
+    val snapshot @ (v, lines) = current(f)
     if (lines.exists(_.batchId == batchId)) return // replay → no-op
     val dataDir = s"$path/data/batch-$batchId-${java.util.UUID.randomUUID()}"
     val entry = Entry(batchId, dataDir,
       write(df.withColumn("batch_id", lit(batchId)), dataDir))
     beforeDmlCommit()
-    if (!tryCommit(f, v + 1, Seq(entry))) {
-      val (_, nlines) = current(f)
-      if (nlines.exists(_.batchId == batchId)) return // competitor replayed
-      throw new java.util.ConcurrentModificationException(
+    commit(f, snapshot) { (nv, ls) =>
+      if (ls.exists(_.batchId == batchId)) None // competitor replayed
+      else if (nv != v) throw new java.util.ConcurrentModificationException(
         s"overwrite of $path aborted: a concurrent write committed " +
           "after this overwrite's snapshot; nothing was applied — " +
           "re-read and retry")
+      else Some(Seq(entry))
     }
   }
 
@@ -780,7 +794,7 @@ final class ManifestTableStore(path: String,
     */
   def truncate(spark: SparkSession): Unit = synchronized {
     val f = fs(spark)
-    val (v, lines) = current(f)
+    val snapshot @ (v, lines) = current(f)
     if (lines.isEmpty) return
     // the truncated table's schema anchor: the CURRENT logical schema
     // (renames/widens/drops applied), materialized like createEmpty's
@@ -793,12 +807,15 @@ final class ManifestTableStore(path: String,
     val entry = Entry(ManifestTableStore.SchemaBatchId, dir,
       emptyStats(schema))
     beforeDmlCommit()
-    if (!tryCommit(f, v + 1, Seq(entry))) {
-      f.delete(new HPath(dir), true)
-      throw new java.util.ConcurrentModificationException(
-        s"TRUNCATE of $path aborted: a concurrent write committed " +
-          "after this truncate's snapshot; nothing was applied — " +
-          "re-read and retry")
+    commit(f, snapshot) { (nv, _) =>
+      if (nv != v) {
+        f.delete(new HPath(dir), true)
+        throw new java.util.ConcurrentModificationException(
+          s"TRUNCATE of $path aborted: a concurrent write committed " +
+            "after this truncate's snapshot; nothing was applied — " +
+            "re-read and retry")
+      }
+      Some(Seq(entry))
     }
   }
 
@@ -914,7 +931,7 @@ final class ManifestTableStore(path: String,
         lines
     }
     val tf = target.fs(spark)
-    val (tv, _) = target.current(tf)
+    val targetSnapshot @ (tv, _) = target.current(tf)
     require(tv == 0L,
       s"clone target ${target.tablePath} already has commits " +
         s"(version $tv)")
@@ -943,10 +960,12 @@ final class ManifestTableStore(path: String,
     AtomicCreate.publish(f,
       new HPath(s"$path/clone_refs/ref-${java.util.UUID.randomUUID()}"),
       target.tablePath.getBytes("UTF-8"))
-    if (!target.tryCommit(tf, 1L, entries))
-      throw new java.util.ConcurrentModificationException(
+    target.commit(tf, targetSnapshot) { (nv, _) =>
+      if (nv != tv) throw new java.util.ConcurrentModificationException(
         s"SHALLOW CLONE to ${target.tablePath} lost to a concurrent " +
           "first commit")
+      Some(entries)
+    }
   }
 
   /** Reserve `n` consecutive IDENTITY values for `col` and return the
@@ -992,13 +1011,8 @@ final class ManifestTableStore(path: String,
     val base =
       if (k == 0L) start
       else {
-        val prev = new HPath(dir, s"r${k - 1}")
-        val in = f.open(prev)
-        val txt =
-          try scala.io.Source.fromInputStream(in, "UTF-8")
-            .mkString.trim
-          finally in.close()
-        val Array(b, c) = txt.split(":", 2)
+        val txt = AtomicCreate.readExisting(f, new HPath(dir, s"r${k - 1}"))
+        val Array(b, c) = txt.trim.split(":", 2)
         b.toLong + c.toLong * step
       }
     (k, base)
@@ -1047,11 +1061,8 @@ final class ManifestTableStore(path: String,
     val ks = f.listStatus(dir).toSeq.map(_.getPath.getName)
       .filter(_.startsWith("r"))
       .flatMap(_.stripPrefix("r").toLongOption)
-    ks.maxOption.map { k =>
-      val in = f.open(new HPath(dir, s"r$k"))
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-    }
+    ks.maxOption.map(k =>
+      AtomicCreate.readExisting(f, new HPath(dir, s"r$k")).trim)
   }
 
   /** Seed `col`'s identity ledger with `tip` as its `r0` range —
@@ -1256,7 +1267,7 @@ final class ManifestTableStore(path: String,
     synchronized {
       require(cols.nonEmpty, "ADD COLUMNS needs at least one column")
       val f = fs(spark)
-      var (v, lines) = current(f)
+      val snapshot @ (v, lines) = current(f)
       require(lines.nonEmpty,
         "ALTER ... ADD COLUMNS on an empty table is refused: the " +
           "first appended batch defines the schema")
@@ -1296,24 +1307,23 @@ final class ManifestTableStore(path: String,
       val entry = Entry(ManifestTableStore.SchemaBatchId, dir,
         emptyStats(schema.add("batch_id",
           org.apache.spark.sql.types.LongType)))
-      var next = v + 1
-      while (!tryCommit(f, next, lines :+ entry)) {
-        val (nv, nlines) = current(f)
+      commit(f, snapshot) { (nv, nlines) =>
         // rebase = new table state: a concurrent append may have
         // introduced one of the fresh names, a concurrent drop/rename
         // may have retired it — re-run the guards before retrying
-        val sch = readEntries(spark, nlines).schema
-        val ret = retiredNames(nlines)
-        fresh.foreach { case (n, _) =>
-          require(!sch.fieldNames.exists(_.equalsIgnoreCase(n)),
-            s"column '$n' was introduced concurrently; ADD COLUMNS " +
-              "rebase refused")
-          require(!ret.exists(_.equalsIgnoreCase(n)),
-            s"column name '$n' was retired concurrently; ADD COLUMNS " +
-              "rebase refused (compact() first)")
+        if (nv != v) {
+          val sch = readEntries(spark, nlines).schema
+          val ret = retiredNames(nlines)
+          fresh.foreach { case (n, _) =>
+            require(!sch.fieldNames.exists(_.equalsIgnoreCase(n)),
+              s"column '$n' was introduced concurrently; ADD COLUMNS " +
+                "rebase refused")
+            require(!ret.exists(_.equalsIgnoreCase(n)),
+              s"column name '$n' was retired concurrently; ADD COLUMNS " +
+                "rebase refused (compact() first)")
+          }
         }
-        lines = nlines; v = nv
-        next = math.max(nv + 1, next + 1)
+        Some(nlines :+ entry)
       }
     }
 
@@ -1334,7 +1344,7 @@ final class ManifestTableStore(path: String,
   def dropColumn(spark: SparkSession, name: String): Unit =
     synchronized {
       val f = fs(spark)
-      var (v, lines) = current(f)
+      val snapshot @ (v, lines) = current(f)
       require(lines.nonEmpty, s"no committed batches under $path")
       val schema = readEntries(spark, lines).schema
       require(schema.fieldNames.exists(_.equalsIgnoreCase(name)),
@@ -1371,17 +1381,14 @@ final class ManifestTableStore(path: String,
       root.put(ManifestTableStore.CountKey, 0L)
       val entry = Entry(ManifestTableStore.SchemaBatchId, dir,
         mapper.writeValueAsString(root))
-      var next = v + 1
-      while (!tryCommit(f, next, lines :+ entry)) {
-        val (nv, nlines) = current(f)
+      commit(f, snapshot) { (nv, nlines) =>
         // rebase: a concurrent rename may have moved the column away —
         // re-check it still exists under this name before retrying
-        require(readEntries(spark, nlines).schema.fieldNames
+        require(nv == v || readEntries(spark, nlines).schema.fieldNames
           .exists(_.equalsIgnoreCase(canonical)),
           s"column '$canonical' changed concurrently; DROP COLUMN " +
             "rebase refused")
-        lines = nlines; v = nv
-        next = math.max(nv + 1, next + 1)
+        Some(nlines :+ entry)
       }
     }
 
@@ -1400,7 +1407,7 @@ final class ManifestTableStore(path: String,
       schema: org.apache.spark.sql.types.StructType): Unit =
     synchronized {
       val f = fs(spark)
-      val (v, lines) = current(f)
+      val snapshot @ (v, lines) = current(f)
       require(v == 0L && lines.isEmpty,
         s"table at $path already has commits (version $v)")
       require(schema.nonEmpty, "CREATE TABLE needs at least one column")
@@ -1420,10 +1427,13 @@ final class ManifestTableStore(path: String,
       val entry = Entry(ManifestTableStore.SchemaBatchId, dir,
         emptyStats(schema.add("batch_id",
           org.apache.spark.sql.types.LongType)))
-      if (!tryCommit(f, 1L, Seq(entry))) {
-        f.delete(new HPath(dir), true)
-        throw new java.util.ConcurrentModificationException(
-          s"CREATE TABLE at $path lost to a concurrent first commit")
+      commit(f, snapshot) { (nv, _) =>
+        if (nv != v) {
+          f.delete(new HPath(dir), true)
+          throw new java.util.ConcurrentModificationException(
+            s"CREATE TABLE at $path lost to a concurrent first commit")
+        }
+        Some(Seq(entry))
       }
     }
 
@@ -1447,7 +1457,7 @@ final class ManifestTableStore(path: String,
       schema: org.apache.spark.sql.types.StructType,
       newPartitionBy: Seq[String]): Unit = synchronized {
     val f = fs(spark)
-    val (v, lines) = current(f)
+    val snapshot @ (v, lines) = current(f)
     require(v > 0L && lines.nonEmpty,
       s"table at $path has no commits; REPLACE needs an existing " +
         "table (CREATE OR REPLACE falls back to CREATE)")
@@ -1469,12 +1479,15 @@ final class ManifestTableStore(path: String,
       emptyStats(schema.add("batch_id",
         org.apache.spark.sql.types.LongType)))
     beforeDmlCommit()
-    if (!tryCommit(f, v + 1, Seq(entry))) {
-      f.delete(new HPath(dir), true)
-      throw new java.util.ConcurrentModificationException(
-        s"REPLACE of $path aborted: a concurrent write committed " +
-          "after this replace's snapshot; nothing was applied — " +
-          "re-read and retry")
+    commit(f, snapshot) { (nv, _) =>
+      if (nv != v) {
+        f.delete(new HPath(dir), true)
+        throw new java.util.ConcurrentModificationException(
+          s"REPLACE of $path aborted: a concurrent write committed " +
+            "after this replace's snapshot; nothing was applied — " +
+            "re-read and retry")
+      }
+      Some(Seq(entry))
     }
   }
 
@@ -1504,7 +1517,7 @@ final class ManifestTableStore(path: String,
   def renameColumn(spark: SparkSession, from: String, to: String): Unit =
     synchronized {
       val f = fs(spark)
-      var (v, lines) = current(f)
+      val snapshot @ (v, lines) = current(f)
       // The full precondition set, re-runnable against a REBASED
       // snapshot: a lost commit race means a competitor changed table
       // state between our validation and our commit — a concurrent
@@ -1563,12 +1576,9 @@ final class ManifestTableStore(path: String,
       root.put(ManifestTableStore.CountKey, 0L)
       val entry = Entry(ManifestTableStore.SchemaBatchId, dir,
         mapper.writeValueAsString(root))
-      var next = v + 1
-      while (!tryCommit(f, next, lines :+ entry)) {
-        val (nv, nlines) = current(f)
-        validate(nlines) // rebase = new table state: re-run the guards
-        lines = nlines; v = nv
-        next = math.max(nv + 1, next + 1)
+      commit(f, snapshot) { (nv, nlines) =>
+        if (nv != v) validate(nlines) // new table state: re-run the guards
+        Some(nlines :+ entry)
       }
     }
 
@@ -1603,7 +1613,7 @@ final class ManifestTableStore(path: String,
   def widenColumn(spark: SparkSession, name: String,
       to: org.apache.spark.sql.types.DataType): Unit = synchronized {
     val f = fs(spark)
-    var (v, lines) = current(f)
+    val snapshot @ (v, lines) = current(f)
     // Re-runnable against a rebased snapshot — same contract as
     // renameColumn: a lost commit race means table state changed, so
     // the guards re-run on the winner's entries before every retry.
@@ -1652,13 +1662,11 @@ final class ManifestTableStore(path: String,
     root.put(ManifestTableStore.CountKey, 0L)
     val entry = Entry(ManifestTableStore.SchemaBatchId, dir,
       mapper.writeValueAsString(root))
-    var next = v + 1
-    while (!tryCommit(f, next, lines :+ entry)) {
-      val (nv, nlines) = current(f)
-      if (validate(nlines).isEmpty) { f.delete(new HPath(dir), true)
-        return } // a concurrent identical widen landed: converged
-      lines = nlines; v = nv
-      next = math.max(nv + 1, next + 1)
+    commit(f, snapshot) { (nv, nlines) =>
+      if (nv != v && validate(nlines).isEmpty) {
+        f.delete(new HPath(dir), true)
+        None // a concurrent identical widen landed: converged
+      } else Some(nlines :+ entry)
     }
   }
 
@@ -1688,7 +1696,7 @@ final class ManifestTableStore(path: String,
       d -> collectStatsOf(applyWidens(applyRenames(
         ManifestTableStore.DirSchemas.read(spark, d), lines), lines))
     }.toMap
-    commitRewrite(f, v + 1, lines, snap => snap.map { e =>
+    commitRewrite(f, v, lines, snap => snap.map { e =>
       if (isDeleteEntry(e) || isSchemaMarker(e)) e
       else fresh.get(e.dir) match {
         case Some(st) => Entry(e.batchId, e.dir, st)
@@ -1742,25 +1750,14 @@ final class ManifestTableStore(path: String,
     require(batchId >= 0, s"batchId must be >= 0, got $batchId")
     val f = fs(spark)
     guardInheritedId(f, batchId)
-    var (v, lines) = current(f)
+    val snapshot @ (_, lines) = current(f)
     if (lines.exists(_.batchId == batchId)) return
     val sp = new HPath(stagedDir, StagedStatsFile)
-    val stats =
-      if (f.exists(sp)) {
-        val st = f.getFileStatus(sp)
-        val in = f.open(sp)
-        try {
-          val buf = new Array[Byte](st.getLen.toInt)
-          in.readFully(buf); new String(buf, "UTF-8")
-        } finally in.close()
-      } else collectStats(spark, stagedDir)
+    val stats = AtomicCreate.readString(f, sp)
+      .getOrElse(collectStats(spark, stagedDir))
     val entry = Entry(batchId, stagedDir, stats)
-    var next = v + 1
-    while (!tryCommit(f, next, lines :+ entry)) {
-      val (nv, nlines) = current(f)
-      if (nlines.exists(_.batchId == batchId)) return
-      lines = nlines; v = nv
-      next = math.max(nv + 1, next + 1)
+    commit(f, snapshot) { (_, ls) =>
+      if (ls.exists(_.batchId == batchId)) None else Some(ls :+ entry)
     }
   }
 
@@ -1790,7 +1787,7 @@ final class ManifestTableStore(path: String,
     // committed manifest (Iceberg's rewrite_data_files + rewrite of
     // delete files in one step).
     val stats = write(readEntries(spark, lines), dataDir)
-    commitRewrite(f, v + 1, lines,
+    commitRewrite(f, v, lines,
       _.filterNot(isDeleteEntry).map(e => Entry(e.batchId, dataDir, stats)))
   }
 
@@ -1842,7 +1839,7 @@ final class ManifestTableStore(path: String,
       val dataDir = s"$path/data/compact-${java.util.UUID.randomUUID()}"
       val stats = write(readDirs(spark, small), dataDir)
       val smallSet = small.toSet
-      commitRewrite(f, v + 1, lines, snap => snap.map { e =>
+      commitRewrite(f, v, lines, snap => snap.map { e =>
         if (smallSet.contains(e.dir)) Entry(e.batchId, dataDir, stats)
         else e
       })
@@ -1861,7 +1858,7 @@ final class ManifestTableStore(path: String,
     * happened — [[rewriteDirs]] propagates this and delete/update/merge
     * throw.
     */
-  private def commitRewrite(f: FileSystem, firstTry: Long,
+  private def commitRewrite(f: FileSystem, v: Long,
       snapshot: Seq[Entry],
       rewrite: Seq[Entry] => Seq[Entry]): Boolean = {
     // Snapshot identity is the FULL entry (batchId, dir, stats), not
@@ -1871,30 +1868,24 @@ final class ManifestTableStore(path: String,
     val snapSet = snapshot.toSet
     val snapDataIds =
       snapshot.filterNot(isDeleteEntry).map(_.batchId).toSet
-    var next = firstTry
-    var committed = tryCommit(f, next, rewrite(snapshot))
-    while (!committed) {
-      val (nv, nlines) = current(f)
+    // an UNSCOPED delete entry in the snapshot masks every data entry,
+    // including fresh appends the rewrite never anti-joined — folding
+    // it in would silently resurrect those rows. Scoped deletes
+    // (everything deleteMoR commits) never mask fresh batches, so
+    // rebasing around fresh appends stays sound.
+    val unscopedDelete = snapshot.exists(e => isDeleteEntry(e) &&
+      ManifestTableStore.parseApplies(e.statsJson).isEmpty)
+    commit(f, (v, snapshot)) { (_, nlines) =>
       val (snap, fresh) = nlines.partition(snapSet.contains)
       // a snapshot data batch re-committed under a new dir (or a
       // snapshot entry gone) = a CONCURRENT MAINTENANCE op landed:
       // abort — rebasing across two rewrites would double-count rows
       val movedByOther = fresh.exists(e =>
         !isDeleteEntry(e) && snapDataIds.contains(e.batchId))
-      if (movedByOther || snap.size != snapshot.size) return false
-      // an UNSCOPED delete entry in the snapshot masks every data
-      // entry, including fresh appends the rewrite never anti-joined —
-      // folding it in would silently resurrect those rows. Scoped
-      // deletes (everything deleteMoR commits) never mask fresh
-      // batches, so rebasing around fresh appends stays sound.
-      val unscopedDelete = snapshot.exists(e => isDeleteEntry(e) &&
-        ManifestTableStore.parseApplies(e.statsJson).isEmpty)
-      if (unscopedDelete && fresh.exists(e => !isDeleteEntry(e)))
-        return false
-      next = math.max(nv + 1, next + 1)
-      committed = tryCommit(f, next, rewrite(snapshot) ++ fresh)
+      if (movedByOther || snap.size != snapshot.size ||
+          (unscopedDelete && fresh.exists(e => !isDeleteEntry(e)))) None
+      else Some(rewrite(snapshot) ++ fresh)
     }
-    true
   }
 
   /** Cluster-compact: rewrite the whole table as up to `buckets`
@@ -1928,7 +1919,7 @@ final class ManifestTableStore(path: String,
       .sorted.toSeq
     val stats = dirs.map(d => d -> collectStats(spark, d)).toMap
     // register every dir; keep every batch id present for replay checks
-    commitRewrite(f, v + 1, lines, { snap =>
+    commitRewrite(f, v, lines, { snap =>
       val ids = snap.map(_.batchId).distinct
       val entries = dirs.zipWithIndex.map { case (d, i) =>
         Entry(ids(i % ids.size), d, stats(d)) }
@@ -2002,7 +1993,7 @@ final class ManifestTableStore(path: String,
       .collect { case p if p.getName.startsWith("__cluster=") => p.toString }
       .sorted.toSeq
     val stats = dirs.map(d => d -> collectStats(spark, d)).toMap
-    commitRewrite(f, v + 1, lines, { snap =>
+    commitRewrite(f, v, lines, { snap =>
       val ids = snap.map(_.batchId).distinct
       val entries = dirs.zipWithIndex.map { case (d, i) =>
         Entry(ids(i % ids.size), d, stats(d)) }
@@ -2461,7 +2452,7 @@ final class ManifestTableStore(path: String,
         lines)), nd))
     }.toMap
     beforeDmlCommit()
-    val committed = commitRewrite(f, v + 1, lines, snap => snap.map { e =>
+    val committed = commitRewrite(f, v, lines, snap => snap.map { e =>
       rewritten.get(e.dir) match {
         case Some((nd, st)) => Entry(e.batchId, nd, st)
         case None => e
@@ -2633,13 +2624,8 @@ final class ManifestTableStore(path: String,
   def resolveTag(spark: SparkSession, name: String): Long = {
     val f = fs(spark)
     val p = tagPath(name)
-    require(f.exists(p), s"unknown tag '$name' on $path")
-    val st = f.getFileStatus(p)
-    val in = f.open(p)
-    try {
-      val buf = new Array[Byte](st.getLen.toInt)
-      in.readFully(buf); new String(buf, "UTF-8").trim.toLong
-    } finally in.close()
+    AtomicCreate.readString(f, p).getOrElse(throw new IllegalArgumentException(
+      s"unknown tag '$name' on $path")).trim.toLong
   }
 
   /** [[readVersion]] through a named ref. */
@@ -2705,9 +2691,10 @@ final class ManifestTableStore(path: String,
     requireNoDeleteFiles(lines, "shallowClone")
     val clone = new ManifestTableStore(targetPath, partitionBy,
       statsColumns, bloomColumns, bloomBits, morDeleteKey)
-    require(clone.current(f)._1 == 0L &&
-      clone.tryCommit(f, 1L, lines),
-      s"target $targetPath already holds a table")
+    clone.commit(f, clone.current(f)) { (cv, _) =>
+      require(cv == 0L, s"target $targetPath already holds a table")
+      Some(lines)
+    }
     clone
   }
 
@@ -2732,14 +2719,6 @@ final class ManifestTableStore(path: String,
       s"writer id must be [A-Za-z0-9._-]+, got '$writerId'")
     val f = fs(spark)
     val dir = new HPath(s"$path/writers")
-    def readName(p: HPath): String = {
-      val st = f.getFileStatus(p)
-      val in = f.open(p)
-      try {
-        val buf = new Array[Byte](st.getLen.toInt)
-        in.readFully(buf); new String(buf, "UTF-8")
-      } finally in.close()
-    }
     // Resolution takes the MINIMUM matching slot, not listStatus order:
     // a double-claim is possible (two processes of one writerId race,
     // the loser's find() ran before the winner's publish, so it
@@ -2753,7 +2732,7 @@ final class ManifestTableStore(path: String,
       else {
         val mine = f.listStatus(dir).toSeq.collect {
           case st if st.getPath.getName.startsWith("slot-") &&
-              readName(st.getPath) == writerId =>
+              AtomicCreate.readExisting(f, st.getPath) == writerId =>
             st.getPath.getName.stripPrefix("slot-").toLong
         }
         if (mine.isEmpty) None else Some(mine.min)
@@ -2799,10 +2778,10 @@ final class ManifestTableStore(path: String,
       s"cannot branch from version $fromVersion of $path: missing or " +
         "incomplete"))
     val b = branch(name)
-    require(b.current(f)._1 == 0L,
-      s"branch '$name' already exists on $path")
-    require(b.tryCommit(f, 1L, entries),
-      s"branch '$name' already exists on $path")
+    b.commit(f, b.current(f)) { (bv, _) =>
+      require(bv == 0L, s"branch '$name' already exists on $path")
+      Some(entries)
+    }
   }
 
   /** A handle committing to branch `name`'s chain: every store
@@ -2874,9 +2853,7 @@ final class ManifestTableStore(path: String,
         else None
       }
       val baseCount = totalCount(base)
-      var done = false
-      while (!done) {
-        val (mv, mLines) = current(f)
+      commit(f, current(f)) { (_, mLines) =>
         val mDataIds = mLines.filterNot(isDeleteEntry)
           .map(_.batchId).toSet
         val byteEqual = mLines.toSet == base.toSet
@@ -2893,7 +2870,7 @@ final class ManifestTableStore(path: String,
           s"cannot fast-forward '$name': main advanced past the " +
             "branch point (a non-maintenance commit landed) — " +
             "recreate the branch from the new head")
-        done = tryCommit(f, mv + 1, bLines)
+        Some(bLines)
       }
     }
 
@@ -2931,8 +2908,7 @@ final class ManifestTableStore(path: String,
       require(f.exists(new HPath(d)),
         s"cannot restore $path to version $version: data dir $d was vacuumed")
     }
-    var v = current(f)._1
-    while (!tryCommit(f, v + 1, target)) v = current(f)._1
+    commit(f, current(f))((_, _) => Some(target))
   }
 
   /** Rows ADDED between two manifest versions — change-data-feed lite
@@ -3454,30 +3430,34 @@ final class ManifestTableStore(path: String,
     * RECOMPUTED against the winner's state — rows committed between
     * snapshot and commit cannot escape the predicate (serializable,
     * not write-skew: single-step version files mean a successful
-    * tryCommit proves nothing changed since the snapshot read).
+    * publish proves nothing changed since the state it was planned on).
     */
   def deleteMoR(spark: SparkSession, predicateSql: String,
       keyCol: String): Unit = synchronized {
     val f = fs(spark)
-    var done = false
-    while (!done) {
-      val (v, lines) = current(f)
-      if (lines.isEmpty) return
-      val keys = readEntries(spark, lines)
-        .filter(expr(predicateSql)).select(keyCol).distinct()
-      val delDir = s"$path/deletes/del-${java.util.UUID.randomUUID()}"
-      keys.write.mode("overwrite").parquet(delDir)
-      if (ManifestTableStore.DirSchemas.read(spark, delDir).isEmpty) {
-        f.delete(new HPath(delDir), true); return
+    // the last attempt's delete file: when the plan is asked again that
+    // attempt lost the race, so the file is not table state — drop it
+    var lost: Option[String] = None
+    commit(f, current(f)) { (_, lines) =>
+      lost.foreach(d => f.delete(new HPath(d), true))
+      if (lines.isEmpty) None
+      else {
+        val keys = readEntries(spark, lines)
+          .filter(expr(predicateSql)).select(keyCol).distinct()
+        val delDir = s"$path/deletes/del-${java.util.UUID.randomUUID()}"
+        keys.write.mode("overwrite").parquet(delDir)
+        if (ManifestTableStore.DirSchemas.read(spark, delDir).isEmpty) {
+          f.delete(new HPath(delDir), true); None
+        } else {
+          lost = Some(delDir)
+          val applies = lines.filterNot(isDeleteEntry)
+            .map(_.batchId).distinct.sorted
+          beforeDmlCommit()
+          Some(lines :+ Entry(ManifestTableStore.DeleteBatchId, delDir,
+            applies.mkString("{\"" + ManifestTableStore.AppliesKey +
+              "\":[", ",", "]}")))
+        }
       }
-      val applies = lines.filterNot(isDeleteEntry)
-        .map(_.batchId).distinct.sorted
-      val entry = Entry(ManifestTableStore.DeleteBatchId, delDir,
-        applies.mkString("{\"" + ManifestTableStore.AppliesKey +
-          "\":[", ",", "]}"))
-      beforeDmlCommit()
-      done = tryCommit(f, v + 1, lines :+ entry)
-      if (!done) f.delete(new HPath(delDir), true)
     }
   }
 
@@ -3520,7 +3500,7 @@ final class ManifestTableStore(path: String,
         ManifestTableStore.DirSchemas.read(spark, dir), dels), nd))
     }.toMap
     beforeDmlCommit()
-    val committed = commitRewrite(f, v + 1, lines, snap =>
+    val committed = commitRewrite(f, v, lines, snap =>
       snap.filterNot(isDeleteEntry).map { e =>
         rewritten.get(e.dir) match {
           case Some((nd, st)) => Entry(e.batchId, nd, st)
@@ -3823,8 +3803,10 @@ object ManifestTableStore {
       */
     def evictUnder(dir: String): Unit = {
       val p = new org.apache.hadoop.fs.Path(dir).toUri.getPath
-      cache.keySet.removeIf(k =>
-        new org.apache.hadoop.fs.Path(k).toUri.getPath.startsWith(p))
+      cache.keySet.removeIf { k =>
+        val kp = new org.apache.hadoop.fs.Path(k).toUri.getPath
+        kp == p || kp.startsWith(p + "/") // not a sibling batch-10 of batch-1
+      }
     }
   }
 

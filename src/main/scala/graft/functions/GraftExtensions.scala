@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** SparkSessionExtensions entry point: makes the engine's codegen'd
   * functions available in ANY session — including pure-SQL users — via
@@ -23,70 +23,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // custom-plan tier: the top-k-per-key operator + its pushdown rule
     e.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
     e.injectOptimizerRule(_ => graft.plans.TopKPushdown)
-    e.injectFunction((FunctionIdentifier("vec_dot"),
-      info("vec_dot", "vec_dot(a, b) - dot product of two float/double arrays"),
-      (exprs: Seq[Expression]) => DotProduct(exprs.head, exprs(1))))
-    e.injectFunction((FunctionIdentifier("vec_sqdist"),
-      info("vec_sqdist", "vec_sqdist(a, b) - squared L2 distance"),
-      (exprs: Seq[Expression]) => SquaredDistance(exprs.head, exprs(1))))
-    e.injectFunction((FunctionIdentifier("vec_hp_buckets"),
-      info("vec_hp_buckets",
-        "vec_hp_buckets(v, tables, bits) - sign-hyperplane LSH buckets"),
-      (exprs: Seq[Expression]) => HyperplaneBuckets(exprs.head,
-        exprs(1).eval().asInstanceOf[Int], exprs(2).eval().asInstanceOf[Int])))
-    e.injectFunction((FunctionIdentifier("minhash_sig"),
-      info("minhash_sig",
-        "minhash_sig(s, numPerms) - minhash signature aggregate over " +
-          "shingle strings"),
-      (exprs: Seq[Expression]) => MinHashAgg(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]).toAggregateExpression()))
-    e.injectFunction((FunctionIdentifier("shingle_hashes"),
-      info("shingle_hashes",
-        "shingle_hashes(text, n) - generator emitting one xxhash64 per " +
-          "word n-gram"),
-      (exprs: Seq[Expression]) => ShingleHashes(exprs.head,
-        exprs(1).eval().asInstanceOf[Int])))
-    e.injectFunction((FunctionIdentifier("shingle_strings"),
-      info("shingle_strings",
-        "shingle_strings(text, n) - generator emitting (pos, sh) per word " +
-          "string per position"),
-      (exprs: Seq[Expression]) => ShingleStrings(exprs.head,
-        exprs(1).eval().asInstanceOf[Int])))
-    e.injectFunction((FunctionIdentifier("char_ngrams"),
-      info("char_ngrams",
-        "char_ngrams(text, n) - generator emitting one character n-gram " +
-          "per position"),
-      (exprs: Seq[Expression]) => CharNgrams(exprs.head,
-        exprs(1).eval().asInstanceOf[Int])))
-    e.injectFunction((FunctionIdentifier("minhash_text"),
-      info("minhash_text",
-        "minhash_text(text, n, numPerms) - row-local minhash signature " +
-          "over word n-grams"),
-      (exprs: Seq[Expression]) => MinHashText(exprs.head,
-        exprs(1).eval().asInstanceOf[Int],
-        exprs(2).eval().asInstanceOf[Int])))
-    e.injectFunction((FunctionIdentifier("mg_sketch"),
-      info("mg_sketch",
-        "mg_sketch(key, capacity) - Misra-Gries heavy-hitter candidate " +
-          "aggregate: capacity-bounded item array (superset of every " +
-          "key with freq > N/(capacity+1); recount exactly downstream)"),
-      (exprs: Seq[Expression]) => MisraGries(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue())
-        .toAggregateExpression()))
-    e.injectFunction((FunctionIdentifier("simhash64"),
-      info("simhash64",
-        "simhash64(text) - 64-bit simhash fingerprint as four 16-bit " +
-          "band words"),
-      (exprs: Seq[Expression]) => SimHash64(exprs.head)))
-    e.injectFunction((FunctionIdentifier("trigram_lm_score"),
-      info("trigram_lm_score",
-        "trigram_lm_score(text, model) - row-local char-trigram LM " +
-          "score struct(n_tri, mean_logp) against a literal model map"),
-      (exprs: Seq[Expression]) => TrigramLmScore(exprs.head, exprs(1))))
-    e.injectFunction((FunctionIdentifier("word_lm_score"),
-      info("word_lm_score",
-        "word_lm_score(text, model) - row-local unigram LM score " +
-          "struct(n_words, logw) against a literal model map"),
-      (exprs: Seq[Expression]) => WordLmScore(exprs.head, exprs(1))))
+    VectorExpressions.functions.foreach { case (name, usage, build) =>
+      e.injectFunction((FunctionIdentifier(name), info(name, usage), build))
+    }
   }
 }

@@ -242,50 +242,61 @@ object HyperplaneBuckets {
 }
 
 object VectorExpressions {
-  /** Register `vec_dot` / `vec_sqdist` in the session's function registry
-    * (idempotent) so they are usable from `expr(...)` and SQL.
+  /** The engine's custom SQL functions as (name, usage, builder) — the
+    * one table both registration paths read ([[register]] and the
+    * [[GraftExtensions]] session extension). Literal arguments are read
+    * through `Number.intValue`, so an INT and a BIGINT literal build the
+    * same expression on either path.
+    */
+  private[functions] val functions
+      : Seq[(String, String, Seq[Expression] => Expression)] = {
+    def int(e: Expression): Int = e.eval().asInstanceOf[Number].intValue()
+    Seq(
+      ("vec_dot", "vec_dot(a, b) - dot product of two float/double arrays",
+        es => DotProduct(es.head, es(1))),
+      ("vec_sqdist", "vec_sqdist(a, b) - squared L2 distance",
+        es => SquaredDistance(es.head, es(1))),
+      ("vec_hp_buckets",
+        "vec_hp_buckets(v, tables, bits) - sign-hyperplane LSH buckets",
+        es => HyperplaneBuckets(es.head, int(es(1)), int(es(2)))),
+      ("minhash_sig", "minhash_sig(s, numPerms) - minhash signature " +
+        "aggregate over shingle strings",
+        es => MinHashAgg(es.head, int(es(1))).toAggregateExpression()),
+      ("shingle_hashes", "shingle_hashes(text, n) - generator emitting " +
+        "one xxhash64 per word n-gram",
+        es => ShingleHashes(es.head, int(es(1)))),
+      ("shingle_strings", "shingle_strings(text, n) - generator emitting " +
+        "(pos, sh) per word string per position",
+        es => ShingleStrings(es.head, int(es(1)))),
+      ("char_ngrams", "char_ngrams(text, n) - generator emitting one " +
+        "character n-gram per position",
+        es => CharNgrams(es.head, int(es(1)))),
+      ("minhash_text", "minhash_text(text, n, numPerms) - row-local " +
+        "minhash signature over word n-grams",
+        es => MinHashText(es.head, int(es(1)), int(es(2)))),
+      ("mg_sketch", "mg_sketch(key, capacity) - Misra-Gries heavy-hitter " +
+        "candidate aggregate: capacity-bounded item array (superset of " +
+        "every key with freq > N/(capacity+1); recount exactly downstream)",
+        es => MisraGries(es.head, int(es(1))).toAggregateExpression()),
+      ("simhash64", "simhash64(text) - 64-bit simhash fingerprint as four " +
+        "16-bit band words",
+        es => SimHash64(es.head)),
+      ("trigram_lm_score", "trigram_lm_score(text, model) - row-local " +
+        "char-trigram LM score struct(n_tri, mean_logp) against a literal " +
+        "model map",
+        es => TrigramLmScore(es.head, es(1))),
+      ("word_lm_score", "word_lm_score(text, model) - row-local unigram LM " +
+        "score struct(n_words, logw) against a literal model map",
+        es => WordLmScore(es.head, es(1))))
+  }
+
+  /** Register every function of [[functions]] in the session's function
+    * registry (idempotent) so they are usable from `expr(...)` and SQL.
     */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("vec_dot",
-      exprs => DotProduct(exprs.head, exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("vec_sqdist",
-      exprs => SquaredDistance(exprs.head, exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("vec_hp_buckets",
-      exprs => HyperplaneBuckets(exprs.head,
-        exprs(1).eval().asInstanceOf[Int], exprs(2).eval().asInstanceOf[Int]),
-      "built-in")
-    reg.createOrReplaceTempFunction("minhash_sig",
-      exprs => MinHashAgg(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]).toAggregateExpression(),
-      "built-in")
-    reg.createOrReplaceTempFunction("shingle_hashes",
-      exprs => ShingleHashes(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    reg.createOrReplaceTempFunction("shingle_strings",
-      exprs => ShingleStrings(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    reg.createOrReplaceTempFunction("char_ngrams",
-      exprs => CharNgrams(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    reg.createOrReplaceTempFunction("minhash_text",
-      exprs => MinHashText(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    reg.createOrReplaceTempFunction("mg_sketch",
-      exprs => MisraGries(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue())
-        .toAggregateExpression(),
-      "built-in")
-    reg.createOrReplaceTempFunction("simhash64",
-      exprs => SimHash64(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("trigram_lm_score",
-      exprs => TrigramLmScore(exprs.head, exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("word_lm_score",
-      exprs => WordLmScore(exprs.head, exprs(1)), "built-in")
+    functions.foreach { case (name, _, build) =>
+      reg.createOrReplaceTempFunction(name, build, "built-in")
+    }
   }
 }

@@ -357,6 +357,34 @@ class ManifestTableStoreSpec extends SparkSpec {
     val all = a.read(spark)
     assert(all.count() == 12, s"lost updates: ${all.count()}")
     assert(all.select("batch_id").distinct().count() == 12)
+
+    // EVERY commit verb steps over such a file the way append did: the
+    // lost race changed no table state, so the verb retries one version
+    // higher — it neither spins on the same version nor reports a
+    // concurrent write that never happened (bounded: a spin fails here)
+    def overCorpse(op: => Unit): Unit = {
+      val v = b.currentVersion(spark)
+      java.nio.file.Files.writeString(
+        root.resolve("manifest").resolve(s"v${v + 1}"), "999\t/nowhere")
+      Await.result(Future(op), 60.seconds)
+      assert(b.currentVersion(spark) == v + 2)
+    }
+    overCorpse(b.append(Seq(("c", 3)).toDF("k", "n"), 2L))
+    assert(b.read(spark).count() == 13)
+    val withC = b.currentVersion(spark)
+    overCorpse(b.deleteMoR(spark, "k = 'c'", "k"))
+    assert(b.read(spark).count() == 12)
+    overCorpse(b.restore(spark, withC))
+    assert(b.read(spark).count() == 13)
+    b.createBranch(spark, "ff", b.currentVersion(spark))
+    b.branch("ff").append(Seq(("d", 4)).toDF("k", "n"), 3L)
+    overCorpse(b.fastForward(spark, "ff"))
+    assert(b.read(spark).count() == 14)
+    overCorpse(b.overwrite(Seq(("o", 5)).toDF("k", "n"), 4L))
+    assert(b.read(spark).select("k").collect().map(_.getString(0))
+      .toSeq == Seq("o"))
+    overCorpse(b.truncate(spark))
+    assert(b.read(spark).count() == 0)
   }
 
   test("drives the streaming bronze→silver path as a drop-in TableStore") {
@@ -430,6 +458,21 @@ class ManifestTableStoreSpec extends SparkSpec {
     store.publishStaged(spark, clean, 1L)
     assert(store.currentVersion(spark) == v0 + 1)
     assert(store.read(spark).count() == 4)
+  }
+
+  test("schema-cache eviction drops the named dir tree only, never a " +
+      "sibling whose name extends it (batch-1 vs batch-10)") {
+    import ManifestTableStore.DirSchemas
+    val root = tmp("dirschemas-")
+    val (one, ten) = (s"$root/batch-1", s"$root/batch-10")
+    Seq(one, ten).foreach(Seq(1L).toDF("n").write.parquet(_))
+    // a stand-in cached schema shows whether a read hit the cache
+    val cached = new org.apache.spark.sql.types.StructType()
+      .add("cached", org.apache.spark.sql.types.LongType)
+    Seq(one, ten).foreach(DirSchemas.put(_, cached))
+    DirSchemas.evictUnder(one)
+    assert(DirSchemas.read(spark, one).columns.toSeq == Seq("n"))
+    assert(DirSchemas.read(spark, ten).columns.toSeq == Seq("cached"))
   }
 
   test("restore is a metadata-only rollback: state equals the target " +

@@ -45,6 +45,9 @@ class GraftExtensionsSpec extends AnyFunSuite {
           "LATERAL VIEW shingle_strings(t, 3) AS pos, sh")
         .collect().map(r => (r.getInt(0), r.getString(1))).toSeq
       assert(sh == Seq((1, "a b c"), (2, "b c d")))
+      // a BIGINT literal argument builds like an INT one
+      assert(spark.sql(
+        "SELECT shingle_hashes('a b c d e', CAST(3 AS BIGINT))").count() == 3)
     } finally {
       SparkSession.clearDefaultSession()
       SparkSession.clearActiveSession()
